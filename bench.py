@@ -27,9 +27,9 @@ r3 `audio_dedup_e2e` regression post-mortem (13.56s -> 14.97s, r3 verdict
     isolated by swapping ONLY candidate_pairs inside the r3 pipeline:
     10.68s vs 10.08s best-of-3, identical result fingerprints -- ~0.6s at
     2k clips (the restructure is a 500k-scale win: ~35% off the candidate
-    stage there). Fixed structurally: candidate_pairs now switches plans on
-    the known clip count (cfg.sizing_join_max_clips), so small corpora get
-    the sizes join back and large corpora keep the exception-sets plan.
+    stage there at 32 cores). Re-measured at 4 cores with every join left
+    to AQE, the exception-sets plan was no faster at 500k either, so
+    candidate_pairs keeps the single sizes join as its one plan.
   * remainder (~0.5s): host noise, now bounded by the best-of-3 protocol.
 """
 

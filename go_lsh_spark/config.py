@@ -145,24 +145,8 @@ class DedupConfig:
     winnow_max_df: int = 8        # fingerprints in more docs are stop-grams
     winnow_min_matches: int = 2   # a 30-char common run shares ~3+ fingerprints
     # skew handling
-    max_bucket_size: int = 2048  # split larger buckets with triangle salting
+    max_bucket_size: int = 2048  # split larger buckets with a salted join
     salt_factor: int = 8
-    # candidate-sizing plan switch (operators/dedup.candidate_pairs): at or
-    # below this many clips the single-pass sizes join wins (bucket table is
-    # small; extra anti/semi passes cost more than they save -- measured
-    # ~6% of the whole pipeline at 2k clips); above it, the exception-sets
-    # plan never joins full sizes onto the bucket table (measured ~35% off
-    # the candidate stage at 500k clips). The crossover is corpus-shaped;
-    # 50k is a heuristic midpoint between the two measured scales.
-    sizing_join_max_clips: int = 50_000
-    # broadcast tier (below the sizing tier): at or below this many clips
-    # the whole cold bucket table (~60 rows/clip x ~40B) fits comfortably
-    # under a broadcast, so the candidate self-join and the verify
-    # signature joins use broadcast hash joins -- zero exchanges of the
-    # bucket/pair stream -- instead of the shuffled hash joins that are the
-    # only safe choice at corpus scale. Same rows out; at 2k clips the
-    # shuffled plan's ~6 exchanges were pure fixed cost.
-    broadcast_join_max_clips: int = 20_000
     # connected components
     max_cc_iterations: int = 20
     # connected components on BOUNDED edge sets run as driver union-find

@@ -1546,16 +1546,22 @@ def _lloyd_cemb_col():
 @lru_cache(maxsize=1)
 def _ivf_best_col():
     """The argmin fold of _ivf_assign as a cached Column (it references
-    only the fixed column names `emb` and `_cents`)."""
-    init = F.struct(F.lit(float("inf")).alias("_d"), F.lit(-1).alias("cid"))
+    only the fixed column names `emb` and `_cents`). The fold is seeded
+    from the first centroid: Spark orders NaN above every number, so a
+    vector whose distances are all NaN keeps the lowest cid -- exactly what
+    min_by(cid, struct(_d, cid)) gives it."""
+
+    def _cand(c):
+        d = V.dot(F.col("emb"), c["cemb"]) * F.lit(-2.0) + c["_c2"]
+        return F.struct(d.alias("_d"), c["cid"].alias("cid"))
 
     def _better(acc, c):
-        d = V.dot(F.col("emb"), c["cemb"]) * F.lit(-2.0) + c["_c2"]
-        return F.when(
-            d < acc["_d"], F.struct(d.alias("_d"), c["cid"].alias("cid"))
-        ).otherwise(acc)
+        cand = _cand(c)
+        return F.when(cand["_d"] < acc["_d"], cand).otherwise(acc)
 
-    return F.aggregate(F.col("_cents"), init, _better)
+    cents = F.col("_cents")
+    rest = F.slice(cents, 2, F.size(cents) - 1)
+    return F.aggregate(rest, _cand(F.element_at(cents, 1)), _better)
 
 
 @lru_cache(maxsize=None)

@@ -79,24 +79,6 @@ def _small_star(edges: DataFrame, dedup: bool = True) -> DataFrame:
     return out.dropDuplicates(["a", "b"]) if dedup else out
 
 
-def connected_components_driver(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """Union-find on the driver for SMALL edge sets: one collect, zero
-    shuffles, same contract as `connected_components` (component = min node
-    id; edge-less nodes not emitted). The distributed star algorithm costs
-    ~10 driver jobs (4 shuffles/double-round + convergence checksums) even
-    on a 100-edge graph -- for streaming's contracted per-batch graphs
-    (bounded by the batch's pair count, typically hundreds of edges) that
-    fixed cost dominated the whole microbatch (measured ~15s of a ~26s
-    batch at local[8]). Callers must bound the input; use
-    `connected_components_auto` to dispatch on measured size."""
-    spark = edges.sparkSession
-    node_type = edges.schema[src].dataType
-    rows = _canon(edges, src, dst).collect()
-    return _driver_cc_from_rows(spark, rows, node_type)
-
-
 def _driver_cc_pairs(rows) -> list:
     """Union-find over canonical (a, b) edge rows -> [(node, component)]."""
     parent: dict = {}
@@ -123,49 +105,26 @@ def _driver_cc_pairs(rows) -> list:
     return [(n, find(n)) for n in parent]
 
 
-def _driver_cc_from_rows(spark, rows, node_type) -> DataFrame:
-    out = _driver_cc_pairs(rows)
-    schema = StructType(
-        [StructField("node", node_type, False), StructField("component", node_type, False)]
-    )
-    return spark.createDataFrame(out, schema)
-
-
 def connected_components_auto(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     driver_max_edges: int = 200_000,
     max_iterations: int = 20,
-) -> DataFrame:
-    """Size-dispatched connected components: collect at most
-    `driver_max_edges`+1 canonical edges -- if the limit is not hit, run
-    driver union-find on the collected rows (the whole small case costs ONE
-    job), else fall back to the distributed star rounds. 200k string-id
-    edges collect to ~20MB, far under driver memory; above the cap the
-    distributed path is the only scale-safe choice."""
-    df, _ = connected_components_auto_collected(
-        edges, src, dst, driver_max_edges, max_iterations
-    )
-    return df
-
-
-def connected_components_auto_collected(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    driver_max_edges: int = 200_000,
-    max_iterations: int = 20,
 ):
-    """connected_components_auto, additionally exposing the driver-path
-    result rows: returns (assignments_df, rows) where rows is the list of
-    (node, component) tuples when the union-find ran on the driver, else
-    None (distributed fallback). Callers that need 'did anything merge?'
-    or want to broadcast the mapping can answer from the rows without
-    spending another Spark action on a DataFrame the driver just built."""
+    """Size-dispatched connected components -> (assignments_df, rows).
+
+    Collects at most `driver_max_edges`+1 canonical edges. If the limit is
+    not hit, union-find runs on the driver over the collected rows (the
+    whole small case costs ONE job; the distributed star algorithm costs
+    ~10 driver jobs even on a 100-edge graph) and `rows` is the list of
+    (node, component) tuples, so callers can answer "did anything merge?"
+    or build a broadcast mapping without another Spark action. Otherwise
+    the distributed star rounds run and `rows` is None. 200k string-id
+    edges collect to ~20MB, far under driver memory; above the cap the
+    distributed path is the only scale-safe choice. Same contract either
+    way: component = min node id, edge-less nodes not emitted."""
     canon = _canon(edges, src, dst)
-    # one job for the whole small case: collect at most cap+1 rows; only
-    # when the limit is hit does the distributed path (and its shuffles) run
     rows = canon.limit(driver_max_edges + 1).collect()
     if len(rows) <= driver_max_edges:
         node_type = edges.schema[src].dataType

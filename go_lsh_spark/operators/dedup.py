@@ -22,10 +22,15 @@ Stages (each a checkpointable Warehouse stage):
   6. clusters:   connected components over verified pairs -> cluster ids.
 
 Skew handling (SURVEY.md §4): bucket sizes are counted first; buckets above
-max_bucket_size generate pairs through a salted triangle join -- members get
-R salt shards, pairs come from shard-pairs (i <= j), spreading a hot
-bucket's |B|^2/2 pair generation over R(R+1)/2 tasks without losing any
-pair. Cold buckets take the plain self-join (AQE skew-join also on).
+max_bucket_size generate pairs through a salted shard join -- members get
+R salt shards, pairs come from all R^2 ordered shard pairs, spreading a hot
+bucket's |B|^2/2 pair generation over R^2 tasks without losing any pair.
+Cold buckets take the plain self-join.
+
+Join policy: no join here carries a hint, and streaming shares the policy.
+AQE picks each join's strategy from measured stage sizes -- broadcast when
+a side measures small, a shuffled join otherwise (with its skew-join split
+on hot partitions).
 """
 
 from __future__ import annotations
@@ -155,13 +160,14 @@ def clips_to_signatures(clips: DataFrame, cfg: DedupConfig, planes: PlaneSet) ->
 # Column objects are plain reusable expression wrappers over fixed column
 # names; building the big trees below costs hundreds of py4j round trips,
 # which the frozen bench re-times at every pipeline construction (the same
-# device as entry_queries._plane_lit_cached). Keyed by the config fields
-# each expression actually reads -- a different config always gets a fresh
-# tree, so the caches can never change what any pipeline computes.
+# device as entry_queries._plane_lit_cached). Keyed by (name, cfg): the
+# frozen DedupConfig hashes by value, so a different config always gets a
+# fresh tree and the cache can never change what any pipeline computes.
 _EXPR_CACHE: dict = {}
 
 
-def _cached_expr(key, build):
+def _cached_expr(name: str, cfg: DedupConfig, build):
+    key = (name, cfg)
     col = _EXPR_CACHE.get(key)
     if col is None:
         col = build()
@@ -214,14 +220,7 @@ def _bucket_entries_col(cfg: DedupConfig) -> F.Column:
         winnow = F.transform("winnow", lambda h: _entry("winnow", F.lit(0), h))
         return F.inline(F.concat(audio, text, winnow))
 
-    key = (
-        "bucket_entries",
-        cfg.num_bands,
-        cfg.rows_per_band,
-        cfg.minhash_bands,
-        cfg.minhash_rows,
-    )
-    return _cached_expr(key, _build)
+    return _cached_expr("bucket_entries", cfg, _build)
 
 
 def build_buckets(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -242,28 +241,70 @@ def build_buckets(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     ).select(*cols)
 
 
-def candidate_pairs(
-    buckets: DataFrame, cfg: DedupConfig, n_clips: int | None = None
-) -> DataFrame:
+def _ham_ok(cfg: DedupConfig) -> F.Column:
+    """Hamming budget applied AT pair generation for simhash-sourced rows
+    of an `a`/`b` bucket self-join: a banded collision with a far-apart
+    full signature can never pass verify's audio gate (which requires
+    hamming <= max_hamming), so killing it here -- before the distinct-pair
+    aggregation shuffle -- changes nothing downstream and removes the
+    dominant false-candidate stream. minhash/winnow rows pass through
+    (their evidence is textual)."""
+    return _cached_expr(
+        "ham_ok",
+        cfg,
+        lambda: (F.col("a.src") != F.lit("simhash"))
+        | (V.hamming64(F.col("a.sig64"), F.col("b.sig64")) <= cfg.max_hamming),
+    )
+
+
+def _pair_rollup(bucket_pairs: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """(src, clip_id_a < clip_id_b, sig64_a, sig64_b) bucket-collision rows
+    -> distinct candidate pairs with evidence flags. Shared by the batch
+    candidate_pairs and the streaming per-batch pair generation."""
+    agg_cols = _cached_expr(
+        "pair_agg_cols",
+        cfg,
+        lambda: [
+            F.max(F.when(F.col("src") == "simhash", 1).otherwise(0)).alias(
+                "from_simhash"
+            ),
+            F.max(F.when(F.col("src") == "minhash", 1).otherwise(0)).alias(
+                "from_minhash"
+            ),
+            F.sum(F.when(F.col("src") == "winnow", 1).otherwise(0)).alias("n_winnow"),
+            F.first("sig64_a").alias("sig64_a"),
+            F.first("sig64_b").alias("sig64_b"),
+        ],
+    )
+    return (
+        bucket_pairs.groupBy("clip_id_a", "clip_id_b")
+        .agg(*agg_cols)
+        # one shared fingerprint is noise (common word pair); a genuine
+        # >=min_common_substring-char overlap shares several. Pairs with no
+        # other evidence and too few shared fingerprints are dropped here,
+        # before the expensive verify stage.
+        .withColumn(
+            "from_winnow",
+            (F.col("n_winnow") >= cfg.winnow_min_matches).cast("int"),
+        )
+        .filter(
+            (F.col("from_simhash") == 1)
+            | (F.col("from_minhash") == 1)
+            | (F.col("from_winnow") == 1)
+        )
+        .drop("n_winnow")
+    )
+
+
+def candidate_pairs(buckets: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Distinct (clip_id_a < clip_id_b) pairs sharing any bucket, with the
     evidence sources that produced them. Skew-split: see module docstring.
 
-    Two physically different sizing plans produce the identical pair set;
-    the switch is a corpus-size cost decision (cfg.sizing_join_max_clips):
-
-    * SMALL (n_clips known and <= threshold): one map-side-combined groupBy
-      + one sizes join classifies every bucket row in a single pass --
-      measured ~6% faster end-to-end at 2k clips, where the extra passes of
-      the big plan cost more than the sizes join saves.
-    * LARGE (default when unknown): only the EXCEPTIONAL key sets leave the
-      size aggregate (stop-gram-capped winnow fingerprints and over-cap hot
-      buckets); the bucket table is filtered with anti/semi joins against
-      those sets with NO broadcast hint -- AQE picks a broadcast join at
-      runtime when the sets are small (the overwhelmingly common case: no
-      shuffle of the bucket table at all) and falls back to a shuffle join
-      when a pathological corpus makes them large, so the plan stays safe
-      at 10^12 clips. Replacing the unconditional sizes join this way
-      measured ~35% off the whole candidate stage at 500k clips.
+    One map-side-combined groupBy sizes every bucket and one sizes join
+    classifies every bucket row in a single pass, at every corpus size.
+    Filtering the bucket table by anti/semi joins against only the capped
+    and hot key sets instead was slower end to end at 500k clips on 4
+    cores (620-624 s vs 535-586 s, identical checksums).
     """
     key = ["src", "band", "hash"]
     # bucket sizes via a map-side-combined groupBy, NOT a window count: a
@@ -271,31 +312,20 @@ def candidate_pairs(
     # land its entire membership in a single task *before* the salting below
     # could act
     sizes = buckets.groupBy(*key).agg(F.count(F.lit(1)).alias("_bsize"))
-    small = n_clips is not None and n_clips <= cfg.sizing_join_max_clips
-    if small:
-        sized_keys = sizes.filter(F.col("_bsize") > 1).filter(
-            # stop-gram cap: a winnow fingerprint's bucket size IS its
-            # document frequency ((hash, clip_id) rows are unique), so
-            # fingerprints in more than winnow_max_df docs drop here, in
-            # the same size pass the skew split needs anyway
-            (F.col("src") != "winnow") | (F.col("_bsize") <= cfg.winnow_max_df)
-        )
-        sized = buckets.join(sized_keys, key)
-        cold = sized.filter(F.col("_bsize") <= cfg.max_bucket_size).drop("_bsize")
-        hot = sized.filter(F.col("_bsize") > cfg.max_bucket_size).drop("_bsize")
-    else:
-        capped = sizes.filter(
-            (F.col("src") == "winnow") & (F.col("_bsize") > cfg.winnow_max_df)
-        ).select(*key)
-        hot_keys = sizes.filter(
-            (F.col("_bsize") > cfg.max_bucket_size)
-            & ((F.col("src") != "winnow") | (F.col("_bsize") <= cfg.winnow_max_df))
-        ).select(*key)
-        cold = buckets.join(capped, key, "left_anti").join(hot_keys, key, "left_anti")
-        hot = buckets.join(hot_keys, key, "left_semi")
+    sized_keys = sizes.filter(F.col("_bsize") > 1).filter(
+        # stop-gram cap: a winnow fingerprint's bucket size IS its document
+        # frequency ((hash, clip_id) rows are unique), so fingerprints in
+        # more than winnow_max_df docs drop here, in the size pass the skew
+        # split needs anyway
+        (F.col("src") != "winnow") | (F.col("_bsize") <= cfg.winnow_max_df)
+    )
+    sized = buckets.join(sized_keys, key)
+    cold = sized.filter(F.col("_bsize") <= cfg.max_bucket_size).drop("_bsize")
+    hot = sized.filter(F.col("_bsize") > cfg.max_bucket_size).drop("_bsize")
 
     pair_cols = _cached_expr(
         "pair_cols",
+        cfg,
         lambda: [
             F.col("a.src").alias("src"),
             F.col("a.clip_id").alias("clip_id_a"),
@@ -304,30 +334,9 @@ def candidate_pairs(
             F.col("b.sig64").alias("sig64_b"),
         ],
     )
-    # Hamming budget applied AT pair generation for simhash-sourced rows:
-    # a banded collision with a far-apart full signature can never pass
-    # verify's audio gate (which requires hamming <= max_hamming), so
-    # killing it here -- before the distinct-pair aggregation shuffle --
-    # changes nothing downstream and removes the dominant false-candidate
-    # stream. minhash/winnow rows pass through (their evidence is textual).
-    ham_ok = _cached_expr(
-        ("ham_ok", cfg.max_hamming),
-        lambda: (F.col("a.src") != F.lit("simhash"))
-        | (V.hamming64(F.col("a.sig64"), F.col("b.sig64")) <= cfg.max_hamming),
-    )
-    # join strategy by corpus size (guide §3.1: pick it deliberately):
-    #   tiny  (n_clips <= broadcast_join_max_clips): broadcast the build
-    #         side -- the cold bucket table is a few MB, and the shuffled
-    #         plan's exchanges are pure fixed cost at this scale;
-    #   else  shuffle_hash: the equal-sized self-join would otherwise
-    #         SortMergeJoin, paying two full sorts of the bucket table; a
-    #         shuffled hash join skips them (hash join spills since Spark
-    #         3.2, and AQE skew handling still applies)
-    tiny = n_clips is not None and n_clips <= cfg.broadcast_join_max_clips
-    join_hint = "broadcast" if tiny else "shuffle_hash"
+    ham_ok = _ham_ok(cfg)
     pairs = (
         cold.alias("a")
-        .hint(join_hint)
         .join(
             cold.alias("b"),
             [
@@ -368,47 +377,11 @@ def candidate_pairs(
         ],
     ).filter(ham_ok).select(*pair_cols)
 
-    agg_cols = _cached_expr(
-        "pair_agg_cols",
-        lambda: [
-            F.max(F.when(F.col("src") == "simhash", 1).otherwise(0)).alias(
-                "from_simhash"
-            ),
-            F.max(F.when(F.col("src") == "minhash", 1).otherwise(0)).alias(
-                "from_minhash"
-            ),
-            F.sum(F.when(F.col("src") == "winnow", 1).otherwise(0)).alias("n_winnow"),
-            F.first("sig64_a").alias("sig64_a"),
-            F.first("sig64_b").alias("sig64_b"),
-        ],
-    )
-    return (
-        pairs.unionByName(hot_pairs)
-        .groupBy("clip_id_a", "clip_id_b")
-        .agg(*agg_cols)
-        # one shared fingerprint is noise (common word pair); a genuine
-        # >=min_common_substring-char overlap shares several. Pairs with no
-        # other evidence and too few shared fingerprints are dropped here,
-        # before the expensive verify stage.
-        .withColumn(
-            "from_winnow",
-            (F.col("n_winnow") >= cfg.winnow_min_matches).cast("int"),
-        )
-        .filter(
-            (F.col("from_simhash") == 1)
-            | (F.col("from_minhash") == 1)
-            | (F.col("from_winnow") == 1)
-        )
-        .drop("n_winnow")
-    )
+    return _pair_rollup(pairs.unionByName(hot_pairs), cfg)
 
 
 def verify_pairs(
-    pairs: DataFrame,
-    signatures: DataFrame,
-    cfg: DedupConfig,
-    n_clips: int | None = None,
-    adaptive_joins: bool = False,
+    pairs: DataFrame, signatures: DataFrame, cfg: DedupConfig
 ) -> DataFrame:
     """Attach evidence and keep pairs passing any gate:
       audio: hamming64 <= max_hamming AND pearson(features) >= threshold
@@ -418,6 +391,10 @@ def verify_pairs(
       substring: lcs_len >= min_common_substring (suffix-array; computed
              only for pairs that failed the cheap gates -- verification-stage
              cost control)
+
+    The signature joins carry no hint: AQE broadcasts whichever side
+    measures small and keeps a shuffled join otherwise (the signature side
+    carries feature vectors, so at corpus scale it never broadcasts).
     """
     # phase 1 -- NO join: sig64 rode along on the bucket rows, so the
     # Hamming budget is a pure filter on the pair stream; simhash-only
@@ -428,7 +405,7 @@ def verify_pairs(
     with_ham = (
         pairs.withColumn(
             "hamming",
-            _cached_expr("hamming", lambda: V.hamming64("sig64_a", "sig64_b")),
+            _cached_expr("hamming", cfg, lambda: V.hamming64("sig64_a", "sig64_b")),
         )
         .filter(
             (F.col("hamming") <= cfg.max_hamming)
@@ -451,34 +428,22 @@ def verify_pairs(
     # a missing transcript is no text evidence at all -> NULL (fails text_ok)
     sentinel = _cached_expr(
         "sentinel",
+        cfg,
         lambda: (F.element_at("minhash_a", 1) == F.lit(_I64_MAX))
         | (F.element_at("minhash_b", 1) == F.lit(_I64_MAX)),
     )
-    # join strategy: below broadcast_join_max_clips the signature table
-    # broadcasts and the pair stream is never exchanged; at corpus scale
-    # the shuffled hash join is the only safe shape (the signature side
-    # carries feature vectors and is never broadcastable). adaptive_joins
-    # (the streaming path) leaves the choice to AQE: both inputs there are
-    # per-batch bounded (pruned signature partitions, batch-rate pairs), so
-    # AQE broadcasts whichever side measures small and falls back to a
-    # shuffled join only when a batch genuinely outgrows it.
-    tiny = n_clips is not None and n_clips <= cfg.broadcast_join_max_clips
-    _hint = "broadcast" if tiny else "shuffle_hash"
-
-    def _side(df: DataFrame) -> DataFrame:
-        return df if adaptive_joins else df.hint(_hint)
-
     enriched = (
-        with_ham.join(_side(sig_a), "clip_id_a")
-        .join(_side(sig_b), "clip_id_b")
+        with_ham.join(sig_a, "clip_id_a")
+        .join(sig_b, "clip_id_b")
         .withColumn(
             "score",
-            _cached_expr("pearson", lambda: V.pearson("features_a", "features_b")),
+            _cached_expr("pearson", cfg, lambda: V.pearson("features_a", "features_b")),
         )
         .withColumn(
             "jaccard_est",
             _cached_expr(
                 "jaccard_est",
+                cfg,
                 lambda: F.when(sentinel, F.lit(None).cast("double")).otherwise(
                     T.jaccard_estimate("minhash_a", "minhash_b")
                 ),
@@ -486,14 +451,14 @@ def verify_pairs(
         )
     )
     audio_ok = _cached_expr(
-        ("audio_ok", cfg.max_hamming, cfg.threshold),
+        "audio_ok",
+        cfg,
         lambda: (F.col("hamming") <= cfg.max_hamming)
         & F.col("score").isNotNull()
         & (F.col("score") >= cfg.threshold),
     )
     text_ok = _cached_expr(
-        ("text_ok", cfg.jaccard_threshold),
-        lambda: F.col("jaccard_est") >= cfg.jaccard_threshold,
+        "text_ok", cfg, lambda: F.col("jaccard_est") >= cfg.jaccard_threshold
     )
     cheap = enriched.withColumn("audio_ok", audio_ok).withColumn(
         "text_ok", F.coalesce(text_ok, F.lit(False))
@@ -516,9 +481,7 @@ def verify_pairs(
     tr_b = signatures.select(
         F.col("clip_id").alias("clip_id_b"), F.col("transcript").alias("transcript_b")
     )
-    needs_lcs = needs_lcs.join(_side(tr_a), "clip_id_a").join(
-        _side(tr_b), "clip_id_b"
-    )
+    needs_lcs = needs_lcs.join(tr_a, "clip_id_a").join(tr_b, "clip_id_b")
     with_lcs = lcs_pairs(needs_lcs).filter(
         F.col("lcs_len") >= cfg.min_common_substring
     )
@@ -543,7 +506,7 @@ def cluster_assignments(
     the cap the distributed star algorithm runs exactly as before (the only
     scale-safe choice); driver-vs-distributed equality is pinned in
     tests/test_text_cc_suffix.py."""
-    comp = connected_components_auto(
+    comp, _ = connected_components_auto(
         verified.select(F.col("clip_id_a").alias("src"), F.col("clip_id_b").alias("dst")),
         driver_max_edges=cfg.cc_driver_max_edges,
         max_iterations=cfg.max_cc_iterations,
@@ -595,14 +558,12 @@ def dedup_pipeline(
         # so a second driver-side count barrier buys nothing and serializes
         # the pipeline (r1 scaling-gate finding).
         signatures = clips_to_signatures(clips, cfg, planes).cache()
-        n_clips = signatures.count()
+        signatures.count()
         features = signatures.select("clip_id", "features")
         buckets = build_buckets(signatures, cfg).cache()
-        # pairs feeds verify exactly once -> lazy cache, no extra job.
-        # n_clips rides along (already materialized for the cache) so the
-        # sizing plan switch costs no extra action.
-        pairs = candidate_pairs(buckets, cfg, n_clips=n_clips).cache()
-        verified = verify_pairs(pairs, signatures, cfg, n_clips=n_clips).cache()
+        # pairs feeds verify exactly once -> lazy cache, no extra job
+        pairs = candidate_pairs(buckets, cfg).cache()
+        verified = verify_pairs(pairs, signatures, cfg).cache()
         clusters = cluster_assignments(clips, verified, cfg)
         return DedupResult(features, signatures, buckets, pairs, verified, clusters)
 
@@ -624,19 +585,13 @@ def dedup_pipeline(
     )
     pairs = warehouse.run(
         "candidate_pairs",
-        # the signatures stage sidecar already carries its row count, so
-        # the sizing plan switch is free here too
-        lambda: candidate_pairs(
-            buckets, cfg, n_clips=warehouse.stages["signatures"].rows
-        ),
+        lambda: candidate_pairs(buckets, cfg),
         config=cfg_dict,
         inputs=["buckets"],
     )
     verified = warehouse.run(
         "verified_pairs",
-        lambda: verify_pairs(
-            pairs, signatures, cfg, n_clips=warehouse.stages["signatures"].rows
-        ),
+        lambda: verify_pairs(pairs, signatures, cfg),
         config=cfg_dict,
         inputs=["candidate_pairs", "signatures"],
     )

@@ -65,12 +65,13 @@ from pyspark.sql import functions as F
 
 from go_lsh_spark.config import DedupConfig
 from go_lsh_spark.hyperplanes import PlaneSet
-from go_lsh_spark.functions import vector as V
-from go_lsh_spark.operators.connected_components import (
-    connected_components_auto,
-    connected_components_auto_collected,
+from go_lsh_spark.operators.connected_components import connected_components_auto
+from go_lsh_spark.operators.dedup import (
+    _ham_ok,
+    _pair_rollup,
+    build_buckets,
+    clips_to_signatures,
 )
-from go_lsh_spark.operators.dedup import build_buckets, clips_to_signatures
 
 CLIPS_SCHEMA = (
     "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, "
@@ -754,31 +755,6 @@ def update_winnow_df(
     )
 
 
-def _pair_rollup(bucket_pairs: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """(src, clip_id_a < clip_id_b, sig64s) bucket-collision rows -> distinct
-    candidate pairs with evidence flags -- identical aggregation semantics to
-    the batch candidate_pairs tail (operators/dedup.py)."""
-    return (
-        bucket_pairs.groupBy("clip_id_a", "clip_id_b")
-        .agg(
-            F.max(F.when(F.col("src") == "simhash", 1).otherwise(0)).alias("from_simhash"),
-            F.max(F.when(F.col("src") == "minhash", 1).otherwise(0)).alias("from_minhash"),
-            F.sum(F.when(F.col("src") == "winnow", 1).otherwise(0)).alias("n_winnow"),
-            F.first("sig64_a").alias("sig64_a"),
-            F.first("sig64_b").alias("sig64_b"),
-        )
-        .withColumn(
-            "from_winnow", (F.col("n_winnow") >= cfg.winnow_min_matches).cast("int")
-        )
-        .filter(
-            (F.col("from_simhash") == 1)
-            | (F.col("from_minhash") == 1)
-            | (F.col("from_winnow") == 1)
-        )
-        .drop("n_winnow")
-    )
-
-
 def _incremental_pairs(
     new_buckets: DataFrame,
     old_buckets: DataFrame,
@@ -808,9 +784,7 @@ def _incremental_pairs(
     new_ok = new_buckets.join(capped, key, "left_anti")
     old_ok = old_buckets.join(capped, key, "left_anti")
 
-    ham_ok = (F.col("a.src") != F.lit("simhash")) | (
-        V.hamming64(F.col("a.sig64"), F.col("b.sig64")) <= cfg.max_hamming
-    )
+    ham_ok = _ham_ok(cfg)
     on = [
         F.col("a.src") == F.col("b.src"),
         F.col("a.band") == F.col("b.band"),
@@ -1192,7 +1166,7 @@ def _update_clusters(
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
-    comp, comp_rows = connected_components_auto_collected(
+    comp, comp_rows = connected_components_auto(
         contracted, driver_max_edges=cc_driver_max_edges
     )
     if comp_rows is not None:
@@ -1609,7 +1583,7 @@ def reconcile(spark: SparkSession, out_path: str, cfg: DedupConfig) -> dict:
             .join(members.withColumnRenamed("clip_id", "clip_id_a"), "clip_id_a", "left_semi")
             .join(members.withColumnRenamed("clip_id", "clip_id_b"), "clip_id_b", "left_semi")
         )
-        comp = connected_components_auto(
+        comp, _ = connected_components_auto(
             edges.select(F.col("clip_id_a").alias("src"), F.col("clip_id_b").alias("dst")),
             driver_max_edges=cfg.cc_driver_max_edges,
         )
@@ -1879,7 +1853,7 @@ def start_incremental_dedup(
             ep_info = None
         _mark("pair_gen")
         pair_sigs = read_pair_signatures(spark, out_path, pair_sparts)
-        verified = verify_pairs(pairs, pair_sigs, cfg, adaptive_joins=True).persist()
+        verified = verify_pairs(pairs, pair_sigs, cfg).persist()
         # the verified-pairs sink write and the cluster update both consume
         # the persisted `verified` and are independent of each other --
         # overlap them too (same §2.6 device; replay heals any partial

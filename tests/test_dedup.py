@@ -304,11 +304,12 @@ def test_deferred_transcript_join_narrows_verify_shuffle(spark, corpus, cfg):
     assert 0 < narrow < wide, (narrow, wide)
 
 
-def test_sizing_plans_produce_identical_pairs(spark):
-    """candidate_pairs has two physically different sizing plans (single
-    sizes join below cfg.sizing_join_max_clips, exception-sets above); both
-    must emit the IDENTICAL pair set across cold buckets, salted hot
-    buckets, and df-capped winnow fingerprints."""
+def test_candidate_pairs_emits_expected_pair_set(spark):
+    """candidate_pairs on hand-built bucket rows emits exactly the expected
+    pair set across cold buckets, a salted hot bucket, a df-capped winnow
+    stop-gram and a rare winnow fingerprint pair."""
+    from itertools import combinations
+
     from go_lsh_spark.operators.dedup import candidate_pairs
 
     cfg = DedupConfig(
@@ -332,18 +333,34 @@ def test_sizing_plans_produce_identical_pairs(spark):
         rows, "src string, band int, hash long, clip_id string, sig64 long"
     )
 
-    def norm(df):
-        return sorted(tuple(r) for r in df.collect())
+    got = {
+        (r.clip_id_a, r.clip_id_b): (r.from_simhash, r.from_minhash, r.from_winnow)
+        for r in candidate_pairs(buckets, cfg).collect()
+    }
+    cold = set(combinations([f"k{i}" for i in range(3)], 2))
+    hot = set(combinations([f"h{i}" for i in range(7)], 2))
+    assert len(cold) == 3 and len(hot) == 21
+    assert set(got) == cold | hot | {("r0", "r1")}
+    assert all(got[p] == (1, 0, 0) for p in cold | hot)
+    assert got[("r0", "r1")] == (0, 0, 1)
 
-    small = candidate_pairs(buckets, cfg, n_clips=10)  # broadcast tier
-    mid = candidate_pairs(buckets, cfg, n_clips=30_000)  # sizes join + shuffle_hash
-    large = candidate_pairs(buckets, cfg, n_clips=10**9)
-    default = candidate_pairs(buckets, cfg)  # unknown count -> large plan
-    assert norm(small) == norm(mid) == norm(large) == norm(default)
-    # and the hot bucket actually produced its full pair set
-    got = {(r.clip_id_a, r.clip_id_b) for r in small.collect()}
-    assert {("h0", "h1"), ("h5", "h6"), ("r0", "r1"), ("k0", "k2")} <= got
-    assert not any(a.startswith("c") for a, _ in got)
+
+def test_expression_cache_keys_on_full_config(spark):
+    """Cached expression trees are keyed by (name, cfg): a config differing
+    in a field an expression reads gets a different tree, and the same
+    config (even a distinct but equal instance) reuses its tree."""
+    from go_lsh_spark.operators.dedup import _bucket_entries_col, _ham_ok
+
+    base = DedupConfig()
+    assert _ham_ok(base) is _ham_ok(DedupConfig())
+    tighter = _ham_ok(DedupConfig(max_hamming=3))
+    assert tighter is not _ham_ok(base)
+    assert str(tighter) != str(_ham_ok(base))
+    assert _bucket_entries_col(base) is _bucket_entries_col(DedupConfig())
+    # the first band's shift amount (64 - rows_per_band) leads the tree, so
+    # it shows in the truncated Column repr
+    narrower = _bucket_entries_col(DedupConfig(rows_per_band=8))
+    assert str(narrower) != str(_bucket_entries_col(base))
 
 
 def test_build_buckets_single_pass_matches_union_form(spark, corpus, cfg):
@@ -412,36 +429,6 @@ def test_build_buckets_single_pass_matches_union_form(spark, corpus, cfg):
     assert [(f.name, f.dataType) for f in got.schema] == [
         (f.name, f.dataType) for f in want.schema
     ]
-    sigs.unpersist()
-
-
-def test_verify_broadcast_tier_produces_identical_rows(spark, corpus, cfg):
-    """verify_pairs' broadcast tier (n_clips <= broadcast_join_max_clips
-    swaps the shuffle_hash hints for broadcast ones) must emit the
-    IDENTICAL verified-pair rows as the at-scale shuffled plan -- the join
-    strategy is a cost decision, never a semantic one."""
-    from go_lsh_spark.hyperplanes import PlaneSet
-    from go_lsh_spark.operators.dedup import (
-        build_buckets,
-        candidate_pairs,
-        clips_to_signatures,
-        verify_pairs,
-    )
-    from go_lsh_spark.sources.synth import clips_to_spark
-
-    df, _ = clips_to_spark(spark, corpus)
-    sigs = clips_to_signatures(df, cfg, PlaneSet(cfg.lsh_config())).persist()
-    pairs = candidate_pairs(build_buckets(sigs, cfg), cfg).persist()
-
-    def norm(vdf):
-        return sorted(tuple(r) for r in vdf.collect())
-
-    tiny = verify_pairs(pairs, sigs, cfg, n_clips=10)
-    scale = verify_pairs(pairs, sigs, cfg, n_clips=10**9)
-    default = verify_pairs(pairs, sigs, cfg)  # unknown count -> scale plan
-    assert norm(tiny) == norm(scale) == norm(default)
-    assert len(norm(tiny)) > 0
-    pairs.unpersist()
     sigs.unpersist()
 
 

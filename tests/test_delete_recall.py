@@ -364,6 +364,42 @@ def test_buckets_single_pass_matches_union(spark, sf_dir):
     assert EQ._buckets_single_pass(emb).schema == EQ._buckets_from(emb).schema
 
 
+def test_ivf_fold_assigns_nan_vectors_like_min_by(spark):
+    """A vector whose centroid distances are all NaN gets the lowest cid
+    from the argmin fold, as it does from min_by(cid, struct(_d, cid));
+    finite vectors keep their nearest centroid."""
+    from go_lsh_spark import entry_queries as EQ
+    from go_lsh_spark.functions import vector as Vf
+
+    nan = float("nan")
+    cent = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0]), (2, [0.0, 0.0, 1.0])],
+        "cid int, cemb array<double>",
+    ).withColumn("_c2", Vf.dot("cemb", "cemb"))
+    emb = spark.createDataFrame(
+        [
+            (0, [0.1, 0.9, 0.0]),
+            (1, [0.0, 0.2, 0.8]),
+            (2, [0.7, 0.1, 0.1]),
+            (3, [nan, nan, nan]),
+            (4, [nan, 0.5, 0.5]),
+        ],
+        "vec_id long, emb array<double>",
+    )
+    dist = Vf.dot("emb", "cemb") * F.lit(-2.0) + F.col("_c2")
+    want = {
+        r["vec_id"]: r["cid"]
+        for r in emb.crossJoin(F.broadcast(cent))
+        .select("vec_id", "cid", dist.alias("_d"))
+        .groupBy("vec_id")
+        .agg(F.min_by("cid", F.struct(F.col("_d"), F.col("cid"))).alias("cid"))
+        .collect()
+    }
+    got = {r["vec_id"]: r["cid"] for r in EQ._ivf_assign(emb, cent).collect()}
+    assert got == want
+    assert got == {0: 1, 1: 2, 2: 0, 3: 0, 4: 0}
+
+
 def test_ivf_fold_assign_and_probe_match_joined_forms(spark, sf_dir):
     """The r6 IVF restructure (argmin fold over a broadcast centroid array,
     sorted-slice probes) must reproduce EXACTLY the rows of the

@@ -161,7 +161,6 @@ def test_cc_driver_matches_distributed(spark):
     min-id root convention and edge-less-node exclusion."""
     from go_lsh_spark.operators.connected_components import (
         connected_components_auto,
-        connected_components_driver,
     )
 
     rng = np.random.default_rng(17)
@@ -173,37 +172,34 @@ def test_cc_driver_matches_distributed(spark):
         ]
         df = spark.createDataFrame(edges, "src long, dst long")
         dist = {r.node: r.component for r in connected_components(df).collect()}
-        drv = {
-            r.node: r.component
-            for r in connected_components_driver(df).collect()
-        }
-        assert drv == dist
-        # auto below the cap takes the driver path; a cap of 0 forces the
-        # distributed fallback -- both must agree with the reference result
-        assert {
-            r.node: r.component
-            for r in connected_components_auto(df, driver_max_edges=10_000).collect()
-        } == dist
-        assert {
-            r.node: r.component
-            for r in connected_components_auto(df, driver_max_edges=0).collect()
-        } == dist
+        # a cap above the edge count takes the driver path and returns its
+        # rows; a cap of 0 forces the distributed fallback (rows None)
+        drv_df, drv_rows = connected_components_auto(df, driver_max_edges=10_000)
+        assert drv_rows is not None
+        assert dict(drv_rows) == dist
+        assert {r.node: r.component for r in drv_df.collect()} == dist
+        dist_df, dist_rows = connected_components_auto(df, driver_max_edges=0)
+        assert dist_rows is None
+        assert {r.node: r.component for r in dist_df.collect()} == dist
 
 
 def test_cc_driver_string_ids_and_empty(spark):
     from go_lsh_spark.operators.connected_components import (
-        connected_components_driver,
+        connected_components_auto,
     )
 
     df = spark.createDataFrame(
         [("clip_b", "clip_c"), ("clip_a", "clip_b"), ("x", "y")],
         "src string, dst string",
     )
-    got = {r.node: r.component for r in connected_components_driver(df).collect()}
+    out, rows = connected_components_auto(df, driver_max_edges=10)
+    assert rows is not None
+    got = {r.node: r.component for r in out.collect()}
     assert got["clip_a"] == got["clip_b"] == got["clip_c"] == "clip_a"
     assert got["x"] == got["y"] == "x"
     empty = spark.createDataFrame([], "src string, dst string")
-    out = connected_components_driver(empty)
+    out, rows = connected_components_auto(empty, driver_max_edges=10)
+    assert rows == []
     assert out.count() == 0
     assert [f.name for f in out.schema.fields] == ["node", "component"]
 
