@@ -3,12 +3,12 @@ typed metadata, with decode / feature-extract / resize / frame-sample as
 Arrow-batched mapInPandas transforms.
 
 The Spark-side plumbing (schemas, batch shapes, UDF signatures,
-partitioning) is real and tested; the actual pixel/frame decoders are
-STUBBED -- this environment ships no image/video codec libraries, so
-unsupported codecs raise NotImplementedError and the test codec
-('raw_gray8' / 'raw_frames_gray8') is a deterministic byte layout that
-exercises the full path end-to-end. Audio (WAV) is fully real in
-functions/audio.py.
+partitioning) is real and tested. PNG is decoded with the stdlib (zlib);
+every other pixel/frame codec (JPEG, MJPEG, WebP, h264, ...) is STUBBED
+and raises NotImplementedError, since no image/video codec library is a
+dependency. The test codecs ('raw_gray8' / 'raw_frames_gray8') are
+deterministic byte layouts that exercise the full path end-to-end. Audio
+(WAV) is fully real in functions/audio.py.
 
 Schemas:
   images(image_id string, bytes binary, width int, height int, codec string)
@@ -35,8 +35,6 @@ VIDEO_SCHEMA = (
 RAW_GRAY8 = "raw_gray8"          # width*height bytes, row-major, 8-bit gray
 RAW_FRAMES_GRAY8 = "raw_frames_gray8"  # n_frames consecutive raw_gray8 planes
 PNG = "png"                      # real stdlib-zlib decoder below
-JPEG = "jpeg"                    # real baseline decoder in functions/jpeg.py
-MJPEG_AVI = "mjpeg_avi"          # real RIFF/AVI demux + per-frame JPEG (functions/avi.py)
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -44,8 +42,8 @@ _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 def decode_png(raw: bytes) -> np.ndarray:
     """Real PNG decoder on the stdlib only (zlib): critical chunks, 8-bit
     depth, color types 0 (gray -> (h,w)) and 2 (RGB -> (h,w,3)),
-    non-interlaced, all five scanline filters (PNG spec §6). No codec
-    library exists in this sandbox; JPEG/WebP remain explicit stubs."""
+    non-interlaced, all five scanline filters (PNG spec §6). Other image
+    codecs (JPEG/WebP) are explicit stubs in decode_image."""
     raw = bytes(raw)
     if raw[:8] != _PNG_SIG:
         raise ValueError("not a PNG stream")
@@ -182,17 +180,10 @@ def decode_image(raw: bytes, width: int, height: int, codec: str) -> np.ndarray:
         if img.shape != (height, width):
             raise ValueError(f"png size mismatch: {img.shape} != {height}x{width}")
         return img
-    if codec == JPEG:
-        from go_lsh_spark.functions.jpeg import decode_jpeg  # noqa: PLC0415
-
-        img = to_gray(decode_jpeg(raw))
-        if img.shape != (height, width):
-            raise ValueError(f"jpeg size mismatch: {img.shape} != {height}x{width}")
-        return img
-    # STUB: webp/avif decoders plug in here (PIL/libvips on a real
-    # cluster); this sandbox has no image codec libraries.
+    # STUB: jpeg/webp/avif decoders plug in here (PIL/libvips on a real
+    # cluster); no image codec library is a dependency.
     raise NotImplementedError(
-        f"image codec {codec!r}: only {RAW_GRAY8}/{PNG}/{JPEG} here"
+        f"image codec {codec!r}: only {RAW_GRAY8}/{PNG} here"
     )
 
 
@@ -224,22 +215,10 @@ def decode_video_frames(
         if arr.size != width * height * n_frames:
             raise ValueError("raw_frames_gray8 size mismatch")
         return arr.reshape(n_frames, height, width)
-    if codec == MJPEG_AVI:
-        # real container demux: RIFF/AVI walk + per-frame baseline JPEG
-        # (functions/avi.py; every MJPEG frame is an independent T.81 image)
-        from go_lsh_spark.functions.avi import decode_avi_mjpeg  # noqa: PLC0415
-
-        frames = decode_avi_mjpeg(raw)
-        if frames.shape != (n_frames, height, width):
-            raise ValueError(
-                f"mjpeg_avi shape mismatch: {frames.shape} != "
-                f"({n_frames}, {height}, {width})"
-            )
-        return frames
-    # STUB: ffmpeg-backed demux/decoding (h264/vp9/av1 -- inter-frame codecs
-    # need a real entropy+motion engine) plugs in here on a real cluster.
+    # STUB: ffmpeg-backed demux/decoding (mjpeg/h264/vp9/av1) plugs in
+    # here on a real cluster.
     raise NotImplementedError(
-        f"video codec {codec!r}: only {RAW_FRAMES_GRAY8}/{MJPEG_AVI} here"
+        f"video codec {codec!r}: only {RAW_FRAMES_GRAY8} here"
     )
 
 

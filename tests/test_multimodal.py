@@ -73,80 +73,6 @@ def test_video_frame_features_spark(spark):
     assert all(len(r.features) == 16 for r in rows_out)
 
 
-# -- AVI (RIFF container, MJPEG frames) --------------------------------------
-
-
-def _smooth_frames(n=5, h=24, w=32, seed=6):
-    """Low-frequency frames (JPEG-friendly, like _smooth_image)."""
-    rng = np.random.default_rng(seed)
-    y, x = np.mgrid[0:h, 0:w]
-    out = np.empty((n, h, w), np.uint8)
-    for i in range(n):
-        a, b = rng.uniform(0.1, 0.5, 2)
-        img = 128 + 80 * np.sin(a * x + i) * np.cos(b * y - i)
-        out[i] = np.clip(np.round(img), 0, 255)
-    return out
-
-
-def test_avi_mjpeg_roundtrip():
-    """RIFF/AVI container roundtrip: header fields, movi chunk walk, idx1
-    cross-check, and per-frame baseline-JPEG fidelity."""
-    from go_lsh_spark.functions.avi import decode_avi_mjpeg, encode_avi_mjpeg
-
-    frames = _smooth_frames()
-    raw = encode_avi_mjpeg(frames, quality=90)
-    assert raw[:4] == b"RIFF" and raw[8:12] == b"AVI "
-    dec = decode_avi_mjpeg(raw)
-    assert dec.shape == frames.shape
-    err = np.abs(dec.astype(int) - frames.astype(int)).max()
-    assert err <= 12, err  # q90 baseline JPEG tolerance (matches jpeg tests)
-
-
-def test_avi_mjpeg_through_spark_video_features(spark):
-    """The real container path rides the SAME Spark plumbing as raw frames:
-    video_frame_features over codec='mjpeg_avi' must sample and featurize
-    identically to the equivalent raw-frame rows (bit-identical decode
-    modulo JPEG loss -> compare against locally decoded frames exactly)."""
-    from go_lsh_spark.functions.avi import decode_avi_mjpeg, encode_avi_mjpeg
-    from go_lsh_spark.functions.multimodal import MJPEG_AVI, image_features
-
-    vids = {f"v{i}": _smooth_frames(n=6, seed=10 + i) for i in range(2)}
-    rows = [
-        (vid, bytes(encode_avi_mjpeg(f, quality=90)), 32, 24, 6, 25.0, MJPEG_AVI)
-        for vid, f in vids.items()
-    ]
-    df = spark.createDataFrame(rows, VIDEO_SCHEMA)
-    out = video_frame_features(df, k_frames=3, grid=4).collect()
-    assert len(out) == 6  # 2 videos x 3 sampled frames
-    # exact agreement with the local decode of the same bytes
-    for r in out:
-        local = decode_avi_mjpeg(
-            bytes(encode_avi_mjpeg(vids[r.video_id], quality=90))
-        )
-        expect = image_features(local[r.frame_index], 4).tolist()
-        assert r.features == expect
-
-
-def test_avi_corrupt_streams_raise_cleanly():
-    from go_lsh_spark.functions.avi import decode_avi_mjpeg, encode_avi_mjpeg
-
-    frames = _smooth_frames(n=3)
-    raw = encode_avi_mjpeg(frames)
-    with pytest.raises(ValueError, match="not an AVI"):
-        decode_avi_mjpeg(b"RIFX" + raw[4:])
-    with pytest.raises(ValueError, match="truncated AVI"):
-        decode_avi_mjpeg(raw[: len(raw) // 2])
-    # header/frame-count mismatch: patch avih dwTotalFrames (offset: RIFF(12)
-    # + LIST hdr(12) + avih hdr(8) + 16 bytes into avih payload)
-    bad = bytearray(raw)
-    import struct as _s
-
-    i = bad.find(b"avih") + 8 + 16
-    _s.pack_into("<I", bad, i, 99)
-    with pytest.raises(ValueError, match="frame count mismatch"):
-        decode_avi_mjpeg(bytes(bad))
-
-
 # -- PNG (real stdlib-zlib codec) --------------------------------------------
 
 
@@ -193,145 +119,5 @@ def test_png_unsupported_flavors_are_explicit():
 
     with pytest.raises(ValueError):
         decode_png(b"\x89PNG\r\n\x1a\nnot-a-chunk")
-    with pytest.raises(ValueError):
-        decode_image(b"\xff\xd8\xff", 4, 4, "jpeg")
-
-
-# -- JPEG (real baseline T.81 codec, functions/jpeg.py) -----------------------
-
-
-def _smooth_image(seed=7, h=41, w=53):
-    rng = np.random.default_rng(seed)
-    yy, xx = np.mgrid[0:h, 0:w]
-    return (
-        128 + 60 * np.sin(xx / 9.0) + 40 * np.cos(yy / 7.0) + rng.normal(0, 4, (h, w))
-    ).clip(0, 255).astype(np.uint8)
-
-
-@pytest.mark.parametrize("quality,max_err", [(95, 10), (90, 14), (50, 24)])
-def test_jpeg_roundtrip_quality(quality, max_err):
-    """Lossy roundtrip through our own encoder: error bounded by quality;
-    odd (non-multiple-of-8) dimensions exercise edge-block padding."""
-    from go_lsh_spark.functions.jpeg import decode_jpeg, encode_jpeg_gray
-
-    img = _smooth_image()
-    dec = decode_jpeg(encode_jpeg_gray(img, quality=quality))
-    assert dec.shape == img.shape
-    err = np.abs(dec.astype(int) - img.astype(int))
-    assert err.max() <= max_err and err.mean() <= max_err / 3, (
-        err.max(), err.mean(),
-    )
-
-
-def test_jpeg_flat_image_near_exact():
-    from go_lsh_spark.functions.jpeg import decode_jpeg, encode_jpeg_gray
-
-    flat = np.full((16, 24), 77, np.uint8)
-    dec = decode_jpeg(encode_jpeg_gray(flat, 90))
-    np.testing.assert_array_equal(dec, flat)
-
-
-def test_jpeg_truncated_stream_raises_cleanly():
-    """Cutting the entropy-coded segment must raise the module's promised
-    ValueError('truncated JPEG stream'), never a raw IndexError from the
-    bit reader (r3 ADVICE)."""
-    from go_lsh_spark.functions.jpeg import decode_jpeg, encode_jpeg_gray
-
-    full = encode_jpeg_gray(_smooth_image(seed=4), 90)
-    for cut in (len(full) - 8, len(full) // 2 + 20):
-        with pytest.raises(ValueError, match="truncated JPEG stream"):
-            decode_jpeg(full[:cut])
-    # truncation mid-restart-scan hits the reset() path too
-    seg = encode_jpeg_gray(_smooth_image(seed=4), 90, restart_interval=1)
-    with pytest.raises(ValueError, match="truncated JPEG stream"):
-        decode_jpeg(seg[: len(seg) - 10])
-
-
-def test_jpeg_unsupported_sampling_factors_raise():
-    """Legal-but-unsupported SOF0 sampling factors (e.g. 3x1) must raise
-    NotImplementedError at header parse, not an opaque numpy shape error
-    in the upsampler (r3 ADVICE)."""
-    from go_lsh_spark.functions.jpeg import decode_jpeg, encode_jpeg_gray
-
-    raw = bytearray(encode_jpeg_gray(_smooth_image(seed=4), 90))
-    # locate SOF0 and patch the single component's h/v nibbles to 3x1
-    i = raw.find(b"\xff\xc0")
-    assert i > 0
-    hv_off = i + 4 + 6 + 1  # marker(2) + len(2) + prec/h/w/nc(6) + cid(1)
-    raw[hv_off] = 0x31
-    with pytest.raises(NotImplementedError, match="sampling factors"):
-        decode_jpeg(bytes(raw))
-
-
-@pytest.mark.parametrize("restart_interval", [1, 3, 7])
-def test_jpeg_restart_markers(restart_interval):
-    """RSTn segmentation must decode identically to the unsegmented stream
-    (byte realign + DC predictor reset path)."""
-    from go_lsh_spark.functions.jpeg import decode_jpeg, encode_jpeg_gray
-
-    img = _smooth_image(seed=11)
-    base = decode_jpeg(encode_jpeg_gray(img, 90))
-    seg = decode_jpeg(encode_jpeg_gray(img, 90, restart_interval=restart_interval))
-    np.testing.assert_array_equal(seg, base)
-
-
-def test_jpeg_color420_roundtrip_and_gray_consistency():
-    """4:2:0 YCbCr: multi-component interleave + chroma upsample + YCbCr->RGB
-    decode paths. Equal-channel RGB must decode bit-identically to the gray
-    path (chroma planes quantize to flat 128 -> zero chroma everywhere)."""
-    from go_lsh_spark.functions.jpeg import (
-        decode_jpeg,
-        encode_jpeg_color420,
-        encode_jpeg_gray,
-    )
-
-    rng = np.random.default_rng(5)
-    h, w = 37, 45
-    yy, xx = np.mgrid[0:h, 0:w]
-    rgb = np.stack(
-        [
-            128 + 60 * np.sin(xx / 9.0) + rng.normal(0, 3, (h, w)),
-            128 + 40 * np.cos(yy / 7.0) + rng.normal(0, 3, (h, w)),
-            128 + 30 * np.sin((xx + yy) / 11.0) + rng.normal(0, 3, (h, w)),
-        ],
-        axis=-1,
-    ).clip(0, 255).astype(np.uint8)
-    dec = decode_jpeg(encode_jpeg_color420(rgb, 90))
-    assert dec.shape == (h, w, 3)
-    err = np.abs(dec.astype(int) - rgb.astype(int))
-    assert err.mean() <= 5 and err.max() <= 25, (err.mean(), err.max())
-
-    gray = rgb[..., 0]
-    eq = np.stack([gray] * 3, axis=-1)
-    np.testing.assert_array_equal(
-        decode_jpeg(encode_jpeg_color420(eq, 90)),
-        np.stack([decode_jpeg(encode_jpeg_gray(gray, 90))] * 3, axis=-1),
-    )
-
-
-def test_jpeg_progressive_is_explicit_stub():
-    from go_lsh_spark.functions.jpeg import decode_jpeg, encode_jpeg_gray
-
-    enc = bytearray(encode_jpeg_gray(_smooth_image(), 90))
-    sof = enc.find(b"\xff\xc0")
-    enc[sof + 1] = 0xC2  # rewrite SOF0 -> SOF2 (progressive)
     with pytest.raises(NotImplementedError):
-        decode_jpeg(bytes(enc))
-
-
-def test_jpeg_decode_image_and_feature_frame(spark):
-    """The Spark mapInPandas image path decodes jpeg like any other codec."""
-    from go_lsh_spark.functions.jpeg import decode_jpeg, encode_jpeg_gray
-    from go_lsh_spark.functions.multimodal import JPEG
-
-    rows, expected = [], {}
-    for i in range(4):
-        img = _smooth_image(seed=20 + i, h=12, w=16)
-        enc = encode_jpeg_gray(img, 90)
-        rows.append((f"jpg{i}", enc, 16, 12, JPEG))
-        expected[f"jpg{i}"] = image_features(decode_jpeg(enc), grid=4)
-    df = spark.createDataFrame(rows, IMAGE_SCHEMA)
-    feats = {r["image_id"]: r["features"] for r in image_feature_frame(df).collect()}
-    assert len(feats) == 4
-    for iid, exp in expected.items():
-        np.testing.assert_allclose(feats[iid], exp, rtol=1e-12)
+        decode_image(b"\xff\xd8\xff", 4, 4, "jpeg")
